@@ -17,6 +17,11 @@ Architecture (SURVEY.md §7):
 
 __version__ = "0.4.0"
 
+from proj_4_spark.engine import worker as _worker
+
+if _worker.in_spark_task():
+    _worker.install()
+
 from proj_4_spark.engine.altops import (  # noqa: F401
     AltOperation,
     Candidate,

@@ -46,6 +46,7 @@ from proj_4_spark.functions.similarity import (
     _corpus_tag_ivf_udf,
     _corpus_tag_lsh_udf,
     _hyperplanes,
+    _i64,
 )
 
 META_NAME = "_ann_meta.json"
@@ -93,6 +94,7 @@ def build_lsh_index(emb_df, path: str, *, dim: int, n_planes: int = 8,
     spark = emb_df.sparkSession
     meta = {
         "kind": "lsh", "dim": dim, "n_planes": n_planes, "seed": seed,
+        "v_type": _element_type(indexed),
         # footer-only count over the just-written files: cheap staleness
         # fingerprint for callers that cache the index
         "corpus_rows": spark.read.parquet(path).count(),
@@ -142,6 +144,7 @@ def build_ivf_index(emb_df, path: str, *, dim: int, n_centroids: int = 16,
     meta = {
         "kind": "ivf", "dim": dim, "n_centroids": n_centroids,
         "seed": seed, "centroids": [[float(x) for x in c] for c in cents],
+        "v_type": _element_type(corpus),
         "corpus_rows": spark.read.parquet(path).count(),
     }
     _write_meta(path, meta)
@@ -149,9 +152,17 @@ def build_ivf_index(emb_df, path: str, *, dim: int, n_centroids: int = 16,
 
 
 
-def _read_index(spark, path: str, key_col: str):
+def _element_type(indexed) -> str:
+    """SQL name of the written vectors' element type ("float",
+    "double"), kept in the sidecar so the probe reads what was built."""
+    return indexed.schema["v"].dataType.elementType.simpleString()
+
+
+def _read_index(spark, path: str, key_col: str, meta: dict):
     """Open the persisted index with the layout's explicit schema and,
     for a LOCAL index directory, driver-side partition listing.
+    Indexes built before the sidecar named the element type were float
+    (the only type their probe could read).
 
     Both choices are measured plan-BUILD wins (the probe path is
     latency-sensitive): schema inference re-reads a footer per open,
@@ -163,7 +174,8 @@ def _read_index(spark, path: str, key_col: str):
     the job)."""
     import os
 
-    schema = f"vec_id bigint, v array<float>, v_norm double, {key_col} bigint"
+    schema = (f"vec_id bigint, v array<{meta.get('v_type', 'float')}>, "
+              f"v_norm double, {key_col} bigint")
     reader = spark.read.schema(schema)
     if not os.path.isdir(path):
         return reader.parquet(path)
@@ -219,9 +231,9 @@ def lsh_topk_prebuilt(spark, path: str, query_df, k: int = 5,
     probe_map: dict = {}
     for ki, s in enumerate(qsig):
         for m in _probe_masks(n_planes, multiprobe):
-            probe_map.setdefault(int(s) ^ m, []).append(ki)
+            probe_map.setdefault(_i64(int(s) ^ m), []).append(ki)
 
-    corpus = (_read_index(spark, path, "bucket")
+    corpus = (_read_index(spark, path, "bucket", meta)
               .where(F.col("bucket").isin(sorted(probe_map))))
     cand = corpus.mapInArrow(
         _candidates_map_arrow(probe_map, Q, key_col="bucket",
@@ -268,7 +280,7 @@ def ivf_topk_prebuilt(spark, path: str, query_df, k: int = 5,
             for lid in lists:
                 probe_map.setdefault(int(lid), []).append(ki)
 
-    corpus = (_read_index(spark, path, "list_id")
+    corpus = (_read_index(spark, path, "list_id", meta)
               .where(F.col("list_id").isin(sorted(probe_map))))
     cand = corpus.mapInArrow(
         _candidates_map_arrow(probe_map, Q, key_col="list_id",

@@ -487,10 +487,12 @@ def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> np.ndarray:
 _JVM_EXPR_MAX_TERMS = 4096
 
 
-def _i64(mask: int) -> int:
-    """Two's-complement fold into a signed 64-bit literal (bit 63 of a
-    signature/probe mask must wrap, not overflow the JVM long)."""
-    return mask - (1 << 64) if mask >= (1 << 63) else mask
+def _i64(v: int) -> int:
+    """Two's-complement fold of any int into a signed 64-bit value (bit
+    63 of a signature, probe mask or probe key must wrap, not overflow
+    the JVM long)."""
+    v &= (1 << 64) - 1
+    return v - (1 << 64) if v >= (1 << 63) else v
 
 
 def signature_col(vec_col, planes: np.ndarray, use_pandas: bool | None = None):
@@ -604,7 +606,7 @@ def lsh_bucket_topk(emb_df, query_df, k: int = 5, n_planes: int = 8,
     probe_map: dict = {}
     for ki, s in enumerate(qsig):
         for m in _probe_masks(n_planes, multiprobe):
-            probe_map.setdefault(int(s) ^ m, []).append(ki)
+            probe_map.setdefault(_i64(int(s) ^ m), []).append(ki)
 
     cand = (emb_df.select(F.col(id_col).alias("vec_id"),
                           F.col(vec_col).alias("v"))

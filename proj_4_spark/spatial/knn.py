@@ -122,6 +122,7 @@ def knn_join(
             "salt", F.pmod(F.xxhash64("doc_id"), F.lit(n_salt)).cast("int"))
         join_keys = ["cell", "salt"]
     # repartition points by cell (and salt) once; reused across passes
+    # and released once the result is checkpointed
     pts = pts.repartition(*join_keys).cache()
 
     remaining = queries_df.select(
@@ -203,9 +204,11 @@ def knn_join(
             bf.withColumn("rank", F.row_number().over(w))
             .where(F.col("rank") <= k)
             .select("q_id", "q_lon", "q_lat", "doc_id", "span_offset", "dist_m", "rank")
-        )
+        ).localCheckpoint(eager=True)
         results = bf_top if results is None else results.unionByName(bf_top)
 
+    # every part of the result is checkpointed: nothing reads pts again
+    pts.unpersist()
     return results.select("q_id", "doc_id", "span_offset", "dist_m", "rank")
 
 

@@ -716,3 +716,77 @@ def test_ann_index_meta_errors(spark, tmp_path):
     build_lsh_index(emb, path, dim=64, n_planes=4)
     with pytest.raises(ValueError, match="not ivf"):
         ivf_topk_prebuilt(spark, path, q)
+
+
+def test_multiprobe_key_wraps_bit_63(spark, tmp_path):
+    """n_planes=64: the nearest vector's bucket differs from the query's
+    only in bit 63, so the multiprobe key for that flip must wrap to a
+    negative int64 (not overflow to 2**63 + s) in both probe paths."""
+    from proj_4_spark.functions.ann_index import (build_lsh_index,
+                                                  lsh_topk_prebuilt)
+    from proj_4_spark.functions.similarity import (_hyperplanes,
+                                                   _pack_signature,
+                                                   _seq_dots,
+                                                   lsh_bucket_topk)
+
+    dim = n_planes = 64
+    P = _hyperplanes(dim, n_planes, 42)
+    rng = np.random.Generator(np.random.PCG64(5))
+    signs = np.where(rng.random(n_planes) < 0.5, -1.0, 1.0)
+    signs[63] = -1.0
+    q = np.linalg.solve(P, signs).astype(np.float32)
+    signs[63] = 1.0
+    near = np.linalg.solve(P, signs).astype(np.float32)
+    others = rng.standard_normal((30, dim)).astype(np.float32)
+    corpus = np.vstack([near, others])
+    qsig, near_sig = _pack_signature(_seq_dots(
+        np.vstack([q, near]).astype(np.float64), P))
+    assert qsig >= 0 and near_sig < 0  # bit 63 clear / set
+    assert near_sig == qsig - (1 << 63)
+    other_sigs = _pack_signature(_seq_dots(others.astype(np.float64), P))
+    assert not any(bin((int(s) ^ int(qsig)) & ((1 << 64) - 1)).count("1")
+                   <= 1 for s in other_sigs)
+
+    emb = spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in enumerate(corpus)],
+        "vec_id long, embedding array<float>")
+    queries = spark.createDataFrame([(100, [float(x) for x in q])],
+                                    "q_id long, embedding array<float>")
+
+    live = lsh_bucket_topk(emb, queries, k=3, n_planes=n_planes, dim=dim,
+                           multiprobe=1).toPandas()
+    assert live["vec_id"].tolist() == [0]
+
+    path = str(tmp_path / "lsh64")
+    build_lsh_index(emb, path, dim=dim, n_planes=n_planes, seed=42)
+    pre = lsh_topk_prebuilt(spark, path, queries, k=3,
+                            multiprobe=1).toPandas()
+    assert pre["vec_id"].tolist() == [0]
+
+
+def test_float64_corpus_prebuilt_matches_in_query(spark, tmp_path):
+    """A float64 corpus builds an index the prebuilt probe reads with
+    its own element type, and the probe equals lsh_bucket_topk."""
+    from proj_4_spark.functions.ann_index import (build_lsh_index,
+                                                  lsh_topk_prebuilt)
+    from proj_4_spark.functions.similarity import lsh_bucket_topk
+
+    rng = np.random.Generator(np.random.PCG64(8))
+    V = rng.standard_normal((500, 8))
+    emb = spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in enumerate(V)],
+        "vec_id long, embedding array<double>")
+    queries = emb.where("vec_id < 10").selectExpr("vec_id as q_id",
+                                                  "embedding")
+    path = str(tmp_path / "lsh_f64")
+    build_lsh_index(emb, path, dim=8, n_planes=4, seed=42)
+
+    pre = lsh_topk_prebuilt(spark, path, queries, k=5,
+                            multiprobe=1).toPandas()
+    live = lsh_bucket_topk(emb, queries, k=5, n_planes=4, dim=8,
+                           multiprobe=1).toPandas()
+    key = ["q_id", "rank"]
+    cols = ["q_id", "vec_id", "rank", "cosine"]
+    assert len(pre) == 50
+    assert (pre.sort_values(key).reset_index(drop=True)[cols].equals(
+        live.sort_values(key).reset_index(drop=True)[cols]))

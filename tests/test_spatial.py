@@ -210,6 +210,32 @@ def test_knn_matches_brute_force(spark, media_pts):
     assert np.allclose(g["dist_m"], e["dist_m"], rtol=1e-9)
 
 
+def test_knn_join_releases_cached_points(spark):
+    """knn_join caches its cell-partitioned points for the ring rounds
+    and releases them once its result is checkpointed.  Local
+    checkpoints persist the RDDs that hold the result, so only the
+    other persistent RDDs are counted."""
+    from pyspark.sql import functions as F
+
+    def persistent_non_checkpoint():
+        rdds = spark.sparkContext._jsc.getPersistentRDDs().values()
+        return sum(1 for r in rdds if not r.rdd().isCheckpointed())
+
+    pts = spark.range(0, 3000).select(
+        F.col("id").cast("string").alias("doc_id"),
+        F.lit(0).alias("span_offset"),
+        ((F.col("id") * 7919 % 360000) / 1000.0 - 180.0).alias("lon"),
+        ((F.col("id") * 104729 % 170000) / 1000.0 - 85.0).alias("lat"))
+    queries = pts.where("doc_id % 211 = 0").selectExpr(
+        "doc_id as q_id", "lon", "lat")
+    before = persistent_non_checkpoint()
+    for max_ring in (3, 0):  # ring rounds; straight to brute force
+        got = knn_join(pts, queries, k=5, res=4, ring=1, max_ring=max_ring,
+                       metric="haversine").toPandas()
+        assert len(got) == 5 * 15
+        assert persistent_non_checkpoint() == before
+
+
 def test_span_sequence_invariant_after_pipeline(spark, docs, media_pts):
     """Running the full geo pipeline must not mutate the documents table
     (span-sequence equality, input_hint)."""
